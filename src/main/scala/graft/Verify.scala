@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,17 +7,13 @@ object Verify {
     // args: <sfDir> <outDir> [onlyPrefixes] — the optional third arg is a
     // comma list of query-name prefixes for tight fix-verify loops
     // (mirrors SPARK_GRAFT_BENCH_ONLY); driver runs pass exactly two.
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [onlyPrefixes]")
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Array[String]] =
       args.drop(2).headOption.map(_.split(",").map(_.trim).filter(_.nonEmpty))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's own session (AQE, 512 initial partitions): the oracle
+    // checks the adaptive plans that are timed, not a second config
+    val spark = graft.tools.ToolSession.local()
     new java.io.File(outDir).mkdirs()
     val selected = only match {
       case Some(ps) => SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }

@@ -44,8 +44,8 @@ object ScaleTiers {
     * corpus, generation off the measured path): occupancy-adaptive
     * banding + clustering, with EXACT twin recall against the
     * generator's reconstructed twin predicate. Returns (vecs, pairs,
-    * clustered, wall_s, twinsFound, twinsTotal). Shared by the ×100
-    * tier run and the ×1000 spot-check main ([[ScaleSpot]]).
+    * clustered, wall_s, twinsFound, twinsTotal). Run by the ×100 tier
+    * run below.
     */
   def embDedupStudy(spark: org.apache.spark.sql.SparkSession, src: String,
                     mult: Int, targetOccupancy: Long = 128L)

@@ -2,9 +2,11 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE local-session builder for graft/tools mains — three CLIs had
-  * copy-pasted the same 9 lines and had already drifted on the
-  * SPARK_GRAFT_CPUS default; a new required config now lands once.
+/** The ONE session builder in the program: Bench, Verify, Smoke and every
+  * graft/tools main open their session here, so the oracle checks the
+  * same adaptive plans the bench times. SPARK_GRAFT_CPUS (default 32) is
+  * the one deployment setting. Test specs keep their own small local
+  * session (SparkSpec).
   */
 object ToolSession {
   def local(): SparkSession = {
@@ -14,9 +16,11 @@ object ToolSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      // spill-safe large shuffles: AQE starts at 512 partitions and
-      // coalesces small stages to the advisory size (the Bench session's
-      // r13 setting — see the scaladoc there for the ×1000 OOM it fixes)
+      // spill-safe large shuffles: start every shuffle at 512 partitions
+      // and let AQE coalesce small stages back to the 64 MB advisory
+      // target. At sf0.1 plans land where they always did, while a ×1000
+      // wedge join's per-task sort shrinks 16×, so 32 concurrent tasks
+      // stop holding multi-GB page sets that OOM the default 8 GiB heap.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -218,7 +218,9 @@ class BenchFormatSpec extends AnyFunSuite {
     // best-of-3 column, not the round-1 single-run 46-query carve-out.
     val md = scala.io.Source.fromFile("BASELINE.md", "UTF-8")
     val text = try md.mkString finally md.close()
-    assert(text.contains("Gate anchor (r18+)"))
+    // the anchor round moves at every re-anchor; pin the heading's
+    // presence, not the round number
+    assert("""Gate anchor \(r\d+\+\)""".r.findFirstIn(text).isDefined)
     assert(!text.contains("compares like-for-like totals on the shared 46"))
     assert(!text.contains("kept as the\ndriver's 2× gate anchor"))
   }

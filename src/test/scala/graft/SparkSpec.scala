@@ -4,7 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session — Spark
-  * getOrCreate makes this cheap across suites). */
+  * getOrCreate makes this cheap across suites).
+  *
+  * Deliberately NOT graft.tools.ToolSession.local(): this session runs
+  * without AQE, because several specs assert non-adaptive plan shapes
+  * (e.g. text.PipelineOpsSpec's sizedSemiJoin "plans differ" case, which
+  * compares the broadcast and shuffle legs' executed plans). Under AQE the
+  * executed plan is an AdaptiveSparkPlan whose join strategy is only
+  * fixed at run time, so those assertions would test the optimizer, not
+  * the code.
+  */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def resource(rel: String): String =
